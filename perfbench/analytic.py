@@ -40,7 +40,7 @@ BOUNDED = {"d2_minhash_lsh": (1, 500 * 499 // 2), "d3_pq_topk": (1, 10)}
 # planning, scheduling, shuffles and persisted slots, not scan bandwidth.
 SCALE = 0.001
 
-MIN_PASSES = 4
+MIN_PASSES = 3
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 

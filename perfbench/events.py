@@ -8,9 +8,11 @@ stand-in for a Kafka topic):
   is its backlog over the time from the start of its first batch to the
   commit of its last, and the result is the median over the drains;
 * open loop: the generator process writes events on a fixed schedule while
-  the queries run with the default (as-soon-as-possible) trigger. Latency is
-  measured per output: commit time of the batch that produced it minus the
-  generator's due time of its input event.
+  the queries run, with the default (as-soon-as-possible) trigger in
+  ``events-small`` and a 1 s processing-time trigger in ``events-bulk``
+  (see NOTES.md for why). Latency is measured per output: commit time of
+  the batch that produced it minus the generator's due time of its input
+  event.
 
 ``events-small`` dispatches on the driver (``ConsumerRouter.batch_processor``)
 over a route table of 50 unit routes; every handler re-emits one derived event
@@ -72,9 +74,6 @@ BULK_SCHEMA = (
 )
 SOURCE_SCHEMA = "topic string, value string"
 DRAINS = 3  # backlogs drained per measurement; throughput is their median
-# Drains in set-up: throughput still climbs over the first few drains of a
-# process (JIT and worker warm-up), so set-up runs them before timing.
-WARMUP_DRAINS = 2
 
 
 @dataclass(frozen=True)
@@ -87,12 +86,27 @@ class Shape:
     # the drain capacity recorded in NOTES.md, never adapted per run.
     rate: float
     tick_s: float
+    # Set-up work before timing: drains, then an open loop of this many
+    # seconds. The first micro-batches of a process run 2-3x slower (JIT,
+    # Python workers, first query plans), and bulk per-batch cost keeps
+    # falling over some 30 batches per query; a drain runs only 2 of them.
+    warmup_drains: int
+    warmup_open_s: float
+    # Share of ``--seconds`` the timed open loop lasts. events-small gets
+    # ~10,000 latency samples in 5 s, and a longer loop did not steady it.
+    open_share: float
+    # Open-loop trigger interval; 0 runs each next batch as soon as the last
+    # one ends (Spark's default). Bulk's three queries would otherwise race
+    # each other for the cores without pause (see NOTES.md).
+    open_trigger_s: float
 
 
-SMALL = Shape("small", backlog_events=12_000, per_file=1_000,
-              files_per_trigger=3, rate=2_000.0, tick_s=0.05)
-BULK = Shape("bulk", backlog_events=200, per_file=50,
-             files_per_trigger=2, rate=30.0, tick_s=0.1)
+SMALL = Shape("small", backlog_events=12_000, per_file=1_000, files_per_trigger=3,
+              rate=2_000.0, tick_s=0.05, warmup_drains=2, warmup_open_s=0.0,
+              open_share=0.5, open_trigger_s=0.0)
+BULK = Shape("bulk", backlog_events=200, per_file=50, files_per_trigger=2,
+             rate=30.0, tick_s=0.1, warmup_drains=0, warmup_open_s=10.0,
+             open_share=1.2, open_trigger_s=1.0)
 
 
 def _names(spec) -> list:
@@ -197,8 +211,8 @@ class EventsWorkload:
 
     def prepare(self, traced: bool) -> None:
         """Have the generator process write every backlog the run drains."""
-        labels = ("main", "traced", "post") if traced else ("main",)
-        names = [f"warmup{i}" for i in range(WARMUP_DRAINS)]
+        labels = ("main", "traced") if traced else ("main",)
+        names = [f"warmup{i}" for i in range(self.shape.warmup_drains)]
         for name in names + [f"{lb}{i}" for lb in labels for i in range(DRAINS)]:
             # the first drain of a process pays one-time costs at any size
             n = self.shape.backlog_events // (3 if name == "warmup0" else 1)
@@ -215,7 +229,7 @@ class EventsWorkload:
     # -- system under test ---------------------------------------------------
 
     def setup(self, spark) -> None:
-        """Build the routers untraced and drain the warm-up backlogs."""
+        """Build the routers untraced and run the shape's warm-up."""
         self.spark = spark
         self.use_tracer(tracing.Tracer(False))
         self.warm_up()
@@ -277,6 +291,8 @@ class EventsWorkload:
                 "checkpointLocation", os.path.join(self.run_dir, "ckpt", name, tag))
             if drain:
                 writer = writer.trigger(availableNow=True)
+            elif self.shape.open_trigger_s:
+                writer = writer.trigger(processingTime=f"{self.shape.open_trigger_s} seconds")
             phase.queries[tag] = writer.start()
 
         tracer = self.tracer
@@ -357,7 +373,8 @@ class EventsWorkload:
         with self.tracer.span("open_loop"):
             self._start_queries(phase, directory, name, drain=False)
             deadline = time.monotonic() + 30
-            while any(q.status["message"] != "Waiting for data to arrive"
+            while any(q.status["message"] not in ("Waiting for data to arrive",
+                                                  "Waiting for next trigger")
                       for q in phase.queries.values()):
                 if time.monotonic() > deadline:
                     raise RuntimeError("open-loop queries did not start")
@@ -416,36 +433,42 @@ class EventsWorkload:
         return worst
 
     def warm_up(self) -> None:
-        """Drain the warm-up backlogs through the same queries (outputs checked)."""
+        """Drain the warm-up backlogs through the same queries, then run the
+        warm-up open loop, if the shape has one (outputs checked)."""
         from event_streamer_spark.producer import clear_emitted_events
 
-        for i in range(WARMUP_DRAINS):
+        for i in range(self.shape.warmup_drains):
             directory, seqs = self.backlogs[f"warmup{i}"]
             _, phase = self.drain(directory, seqs, f"warmup{i}-drain")
             self.check_phase(phase, self._outputs(phase))
             clear_emitted_events()
+        if self.shape.warmup_open_s:
+            phase, _ = self.open_loop("warmup-open", self.shape.warmup_open_s)
+            self.check_phase(phase, self._outputs(phase))
+            clear_emitted_events()
 
     def measure(self, seconds: float, label: str) -> dict:
-        """Drain the ``label`` backlogs one after another, then run the open
-        loop for ``seconds``. Throughput is the median over the drains;
-        each latency percentile is the median of its value in the open
-        loop's first, middle and last third (by due time), so that a short
-        stall of the shared machine moves one third, not the result."""
+        """Run the open loop for the shape's share of ``seconds``, right
+        after set-up's warm-up, then drain the ``label`` backlogs one after
+        another. Throughput is the median over the drains; each latency
+        percentile is the median of its value in the open loop's first,
+        middle and last third (by due time), so that a short stall of the
+        shared machine moves one third, not the result."""
         from event_streamer_spark.producer import clear_emitted_events
 
-        eps, phases = [], []
+        seconds *= self.shape.open_share
+        open_phase, gen_stats = self.open_loop(f"{label}-open", seconds)
+        eps, phases = [], [open_phase]
         for i in range(DRAINS):
             directory, seqs = self.backlogs[f"{label}{i}"]
             rate, phase = self.drain(directory, seqs, f"{label}{i}-drain")
             eps.append(rate)
             phases.append(phase)
-        open_phase, gen_stats = self.open_loop(f"{label}-open", seconds)
-        phases.append(open_phase)
         per_phase = [self._outputs(phase) for phase in phases]
         for phase, out in zip(phases, per_phase):
             self.check_phase(phase, out)
         clear_emitted_events()
-        open_out = per_phase[-1]
+        open_out = per_phase[0]
         lat = self.latencies_ms(open_phase, open_out)
         thirds: list[list[float]] = [[], [], []]
         span_ns = seconds * 1e9 / 3
@@ -462,7 +485,7 @@ class EventsWorkload:
 
     def layer_metrics(self, result: dict) -> dict[str, float]:
         """Per-layer numbers of a traced ``measure`` result."""
-        open_phase = result["phases"][-1]
+        open_phase = result["phases"][0]
         queries = [q for ph in result["phases"] for q in ph.queries.values()]
         prog = tracing.progress_metrics(queries)
         batches = max(1, prog["batches"])

@@ -10,12 +10,12 @@ One run:
 1. the workload's generator process writes its inputs from ``--seed`` into a
    per-run directory under ``.perfbench_tmp/`` at the repository root;
 2. set-up (timed as ``setup_s``): Spark session start, then the workload's
-   warm-up (events: a warm-up drain; analytic: the cold pass);
+   warm-up (events: warm-up drains or a warm-up open loop; analytic: the
+   cold pass);
 3. the timed phase, for about ``--seconds``;
 4. with ``--trace 1``, the timed phase again with spans and layer counters
-   on, then once more untraced; the per-layer numbers come from the traced
-   phase, and ``trace.overhead_pct`` compares its throughput with the mean
-   of the two untraced phases around it;
+   on; the per-layer numbers come from the traced phase, and
+   ``trace.overhead_pct`` compares its throughput with the untraced one's;
 5. output checks, outside the timed phases.
 
 Every end-to-end metric is printed by name with its unit; the last stdout
@@ -170,12 +170,8 @@ def run(args: argparse.Namespace, run_dir: str) -> dict:
                 wl.use_tracer(tracer)
                 traced = wl.measure(args.seconds, "traced")
                 layers = wl.layer_metrics(traced)
-                wl.use_tracer(tracing.Tracer(False))
-                # untraced phases before and after, so warm-up drift cancels
-                post = wl.measure(args.seconds, "post")
-                untraced = (result["throughput_per_s"] + post["throughput_per_s"]) / 2
                 layers["trace.overhead_pct"] = 100.0 * (
-                    untraced / traced["throughput_per_s"] - 1.0)
+                    result["throughput_per_s"] / traced["throughput_per_s"] - 1.0)
                 layers["trace.spans"] = len(tracer.spans)
                 for name, (total, own) in sorted(tracer.totals_ms().items()):
                     print(f"# span {name}: total {total:.1f} ms, self {own:.1f} ms",
