@@ -131,6 +131,8 @@ def _sentinel(spark, runs: int = 5) -> dict[str, float]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    # same default as get_spark's local[N]
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -304,7 +306,7 @@ def main() -> None:
         },
         "repeats": repeats,
         "sf": sf,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": cpus,
     }
 
     # Full detail to a file; the LAST stdout line is a compact summary
@@ -322,7 +324,7 @@ def main() -> None:
         "SPARK_GRAFT_BENCH_OUT",
         os.path.join(
             os.path.dirname(os.path.abspath(__file__)),
-            f"BENCH_full_sf{sf}_c{os.environ.get('SPARK_GRAFT_CPUS', '32')}.json",
+            f"BENCH_full_sf{sf}_c{cpus}.json",
         ),
     )
     try:

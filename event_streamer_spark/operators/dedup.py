@@ -367,9 +367,12 @@ def d2_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     """D2 (scale path): MinHash + LSH banding near-dup candidates.
 
     16 bands × 4 rows: P(candidate) ≈ 1-(1-j⁴)¹⁶ — steep around j≈0.5.
-    Shuffles: one on (band, band_hash) to form buckets, one self-join on
-    bucket, one groupBy pair. All O(docs × bands); no O(n²) stage, no
-    driver-side state. Deterministic: fixed permutations + CRC32.
+    Shuffles: one on (band, band_hash) that collects each bucket into a
+    sorted ``collect_set`` array, whose pairs expand JVM-side in
+    doc_a < doc_b order; one distinct on the pair; then the two
+    signature joins. No self-join, no driver-side state; pair fan-out
+    per bucket is C(|bucket|, 2). Deterministic: fixed permutations +
+    CRC32.
     """
     # single-file parquet arrives as ONE partition — spread the UDF work
     # across cores (at real scale the source has many splits already)

@@ -248,16 +248,14 @@ def _session_paths(spark: SparkSession, sf: str) -> DataFrame:
     us = F.unix_micros(F.col("ts"))
     prev_us = F.unix_micros(F.lag("ts").over(w))
     # r14 (guide §2.4 — establish the ordering once): the whole chain
-    # runs on ONE user_id exchange and ONE sort. The per-user row_number
-    # rides the same Window pass as the lag; the within-session rank is
+    # runs on ONE user_id exchange. The per-user row_number rides the
+    # same Window pass as the lag; the within-session rank is
     # rn_user − (rn_user of the session's first event) + 1, where the
-    # session-start rn is a running max over the SAME ordering — the
-    # r13 shape re-sorted every event by (user_id, session_seq, ts,
-    # event_id) just to run a second row_number, a full local re-sort
-    # of data already in exactly that order (session_seq is monotonic
-    # in (ts, event_id) within a user). The session-start rn replaces
-    # session_seq as the group key: both are unique per session within
-    # a user, and the key never leaves this helper.
+    # session-start rn is a running max in rn_user order — the r13
+    # shape ran a second row_number over (user_id, session_seq, ts,
+    # event_id). The session-start rn replaces session_seq as the group
+    # key: both are unique per session within a user, and the key never
+    # leaves this helper.
     ordered = e.select(
         "user_id",
         "event_type",
@@ -268,7 +266,15 @@ def _session_paths(spark: SparkSession, sf: str) -> DataFrame:
         ).otherwise(0).alias("is_new"),
         F.row_number().over(w).alias("rn_user"),
     )
-    w_run = w.rowsBetween(Window.unboundedPreceding, 0)
+    # ordering by rn_user, not (ts, event_id), fixes the tie order of
+    # exact-duplicate rows by the row_number above, as the SQL oracle's
+    # running sum is anchored on rno; it costs a local sort on
+    # (user_id, rn_user), no exchange
+    w_run = (
+        Window.partitionBy("user_id")
+        .orderBy("rn_user")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
     sess = ordered.withColumn(
         "session_start",
         # is_new=1 on every session's first row (lag NULL on the first

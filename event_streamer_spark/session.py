@@ -4,6 +4,11 @@ Local testing runs ``local[N]``; the conf is chosen so the same logical
 plans survive a 1000-executor cluster: AQE on (runtime re-plan, skew-join
 splitting, partition coalescing), Arrow on (every Pandas-UDF boundary is
 batched), broadcast threshold left to AQE's runtime statistics.
+Streaming checkpoints use Spark's FileSystem-based checkpoint manager:
+without native Hadoop IO the default FileContext manager forks a
+``readlink``/``chmod`` process per metadata call, and on ``file:`` both
+managers refuse to overwrite an existing batch file (exists-check, then
+rename).
 """
 
 from __future__ import annotations
@@ -19,7 +24,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
@@ -32,6 +37,13 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        # the FileContext default forks readlink/chmod for each offset,
+        # commit, source-log and state file when libhadoop is absent
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

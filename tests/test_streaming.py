@@ -378,6 +378,75 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     assert final.select("event_id").distinct().count() == ev.count()
 
 
+def test_checkpoint_recovery_exactly_once_stateful(spark, tmp_path):
+    """C10 with state: a watermarked ``stream_dedup`` leg sees file
+    ``a``, stops, and restarts from the same checkpoint after file ``b``
+    lands. Its output must equal the batch dedup of ``a ∪ b``: keys of
+    ``a`` repeated in ``b`` are dropped only if the state-store delta
+    files (and the source, offset and commit logs) survive the restart."""
+    import datetime as dt
+    import glob
+
+    schema = "user_id bigint, event_type string, ts timestamp"
+    keys = ["user_id", "event_type"]
+    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
+
+    def rows(users, event_type):
+        return [(u, event_type, t0 + dt.timedelta(seconds=u)) for u in users]
+
+    # every ts within 150 s of t0 under a 10 minute watermark: nothing is
+    # late and no key's state expires, so the batch twin is exact
+    a = rows(range(100), "click") + rows(range(0, 100, 3), "click")
+    b = (
+        rows(range(50, 150), "click")  # 50..99 repeat keys of a
+        + rows(range(0, 150, 7), "view")
+        + rows(range(0, 150, 14), "view")  # duplicates within b
+    )
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run():
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src + "/*")
+        )
+        q = (
+            stream_dedup(stream, keys, ts_col="ts", watermark="10 minutes")
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    spark.createDataFrame(a, schema).coalesce(1).write.parquet(src + "/a")
+    run()
+    assert spark.read.parquet(out).count() == 100
+    spark.createDataFrame(b, schema).coalesce(1).write.parquet(src + "/b")
+    run()
+
+    def canon(df):
+        return sorted(tuple(r) for r in df.select(*keys, "ts").collect())
+
+    got = canon(spark.read.parquet(out))
+    # duplicates are identical rows, so the kept row is never a choice
+    exp = canon(spark.createDataFrame(a + b, schema).dropDuplicates(keys))
+    assert got == exp
+    # one row per key: click for users 0..149, view for every 7th user
+    assert len({r[:2] for r in got}) == len(got) == 150 + 22
+    # the restart ran batch 1 on the recovered state, and each log's
+    # batch file kept its checksum file
+    assert glob.glob(ckpt + "/state/0/*/2.delta")
+    for f in ("sources/0/1", "offsets/1", "commits/1"):
+        head, tail = os.path.split(f)
+        assert os.path.exists(os.path.join(ckpt, head, "." + tail + ".crc"))
+
+
 def test_router_start_schema_drops_corrupt_jvm_side(spark, tmp_path):
     """A3: with a declared schema, corrupt AND non-object values drop in
     the JVM filter before dispatch (the all-null-struct from_json trap
