@@ -55,20 +55,17 @@ class ConsumerConfig:
 
     group_id: str = ""
     strategy: Literal["topic", "one-by-one"] = DEFAULT_STRATEGY
-    # Where 'topic'-strategy callbacks execute (engine extension).
-    # Default 'driver' preserves the reference's single-process handler
+    # Where 'topic'-strategy callbacks execute (engine extension); any
+    # other value raises when the router builds its batch body.
+    # 'driver' (default) preserves the reference's single-process handler
     # semantics (``legacy-consumer.ts:89-115``): callbacks may close over
     # and mutate driver-side state and their side effects are observed.
-    # Opt-in 'executor' ships serializable callbacks to workers (scales
-    # with the cluster; side effects MUST flow through emit or external
-    # systems — driver-memory mutations are silently lost) and raises if
-    # a callback can't cloudpickle; 'auto' picks executor when every
-    # callback serializes, warning loudly, else falls back to driver.
-    dispatch: Literal["auto", "driver", "executor"] = "driver"
-    # Driver dispatch collects every micro-batch row to the driver (the
-    # reference's single-process model). Above this many rows per batch a
-    # one-time warning points at dispatch='executor'; None disables.
-    driver_dispatch_warn_rows: Optional[int] = 100_000
+    # 'executor' ships the callbacks to workers (scales with the cluster;
+    # side effects MUST flow through emit or external systems —
+    # driver-memory mutations are lost) and raises if a callback can't
+    # cloudpickle. Driver dispatch warns once above
+    # ``consumer.DRIVER_DISPATCH_WARN_ROWS`` rows in one batch.
+    dispatch: Literal["driver", "executor"] = "driver"
     max_messages_per_topic: Union[int, Literal["unlimited"]] = (
         DEFAULT_MAX_MESSAGES_PER_TOPIC
     )

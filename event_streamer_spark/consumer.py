@@ -11,7 +11,10 @@ Re-expression of the reference consumer
 * **Dispatch predicate (A5)** — a route matches iff
   ``topic == route.topic AND (route.event_name IS NULL OR
   route.event_name == content["code"])``; one message can match many
-  routes (reference ``legacy-consumer.ts:92``).
+  routes (reference ``legacy-consumer.ts:92``). :func:`match_routes` is
+  the one Python form, shared by ``input()``, ``dispatch_message`` and
+  the executor kernel; :meth:`ConsumerRouter.route_predicate` is its
+  Column form for ``compile()``.
 * **Testing injection (A19)** — ``input()`` computes ``code``, merges it
   into the payload (NO ``createdAt``/``appName`` enrichment — deliberate
   reference asymmetry, ``legacy-consumer.ts:73-81``), and awaits matching
@@ -26,10 +29,13 @@ Re-expression of the reference consumer
 Two execution paths:
 
 1. **Imperative handlers** (reference-parity): arbitrary Python callbacks
-   run driver-side over each micro-batch — the reference is a single-node
-   microservice consumer, so this is the same execution model with
-   Spark's Kafka source underneath (offset tracking, checkpointing →
-   upgrade to restartable at-least-once).
+   run over each micro-batch in one of two dispatch modes
+   (``config.consumer.dispatch``). ``'driver'``, the default, runs them
+   on the driver — the reference is a single-node microservice
+   consumer, so this is the same execution model with Spark's Kafka
+   source underneath (offset tracking, checkpointing → upgrade to
+   restartable at-least-once). ``'executor'`` runs serializable
+   callbacks in worker processes (:func:`make_partition_dispatcher`).
 2. **Declarative transforms** (the scale path): a route whose handler is
    a ``DataFrame -> DataFrame`` transform compiles to
    ``filter(predicate) |> transform |> sink`` and runs fully distributed
@@ -48,9 +54,15 @@ from pyspark.sql.types import StructType
 
 from event_streamer_spark.config import get_config, resolve_app_name
 from event_streamer_spark.helpers import get_parsed_json, to_array, to_upper_camel_case
-from event_streamer_spark.producer import emit, kafka_writer_options
+from event_streamer_spark.producer import emit, prepare_emit, write_to_kafka
 
 logger = logging.getLogger(__name__)
+
+# Driver dispatch collects every micro-batch row to the driver. Above
+# this many rows in one batch a one-time warning points at
+# dispatch='executor': at that volume the driver bounds throughput. A
+# constant, since no caller has needed another threshold.
+DRIVER_DISPATCH_WARN_ROWS = 100_000
 
 Handler = Callable[[dict, Callable], Any]
 Transform = Callable[[DataFrame], DataFrame]
@@ -65,54 +77,33 @@ def make_partition_dispatcher(
 ) -> Callable:
     """Executor-side dispatch kernel for the ``'topic'`` strategy.
 
-    Returns a picklable ``rows -> iter[(topic, value, hosts)]`` for
-    ``rdd.mapPartitions``: parses each message, applies the A5 predicate
-    against ``route_specs`` (``(topic, event_name, callback)`` tuples),
-    runs callbacks with an ``emit`` shim that buffers normalized
-    payloads instead of producing inline — the caller writes them to
-    Kafka as one distributed batch. Handler errors are swallowed (A16).
+    Returns a picklable ``rows -> iter[(topic, value, key, hosts)]`` for
+    ``rdd.mapPartitions``: each message goes through
+    :func:`dispatch_to_routes` over ``route_specs`` (``(topic,
+    event_name, callback)`` tuples), with an ``emit`` shim that buffers
+    the prepared payloads instead of producing inline — the caller
+    writes them to Kafka as one distributed batch.
     """
+    routes = [Route(topic, name, callback) for topic, name, callback in route_specs]
 
     def dispatch_partition(rows):
-        from event_streamer_spark import producer as P
-        from event_streamer_spark.helpers import get_parsed_json as parse
-
         emitted: list[tuple] = []
 
         def local_emit(p1, p2=None, p3=None):
-            outputs, overwrite = P.parse_emit_args(p1, p2, p3)
-            P.validate_outputs(outputs)
-            hosts = P.get_hosts(
-                primary_host, additional_hosts or None, overwrite
+            payloads, hosts = prepare_emit(
+                p1, p2, p3, app_name, primary_host, additional_hosts, key_column
             )
-            payloads = P.normalize_payloads(outputs, app_name, key_column)
+            host_set = ",".join(hosts)
             for payload in payloads:
                 for msg in payload.messages:
                     emitted.append(
-                        (
-                            payload.topic,
-                            msg["value"],
-                            msg.get("key"),
-                            ",".join(hosts),
-                        )
+                        (payload.topic, msg["value"], msg.get("key"), host_set)
                     )
             return []
 
         for row in rows:
-            content = parse(row["value"])
-            if content is None:
-                continue
-            code = content.get("code") if isinstance(content, dict) else None
-            for topic, event_name, callback in route_specs:
-                if topic == row["topic"] and (
-                    event_name is None or event_name == code
-                ):
-                    try:
-                        callback(content, local_emit)
-                    except Exception:  # noqa: BLE001 — A16 swallow
-                        logging.getLogger(__name__).exception(
-                            "Handler error on topic %s", topic
-                        )
+            content = get_parsed_json(row["value"])
+            dispatch_to_routes(routes, row["topic"], content, local_emit)
         return iter(emitted)
 
     return dispatch_partition
@@ -131,6 +122,44 @@ class Route:
     event_name: Optional[str] = None
     callback: Optional[Handler] = None
     transform: Optional[Transform] = None
+
+
+def match_routes(
+    routes: Sequence[Route], topic: str, code: Optional[str]
+) -> list[Route]:
+    """The A5 predicate, in registration order: ``topic == route.topic
+    AND (route.event_name IS NULL OR route.event_name == code)``."""
+    return [
+        r
+        for r in routes
+        if r.topic == topic and (r.event_name is None or r.event_name == code)
+    ]
+
+
+def dispatch_to_routes(
+    routes: Sequence[Route], topic: str, content: Any, emit_fn: Callable
+) -> int:
+    """Run every matching callback on one parsed message.
+
+    Corrupt (``None``) content is silently dropped (A3). Non-dict JSON
+    (arrays, numbers, strings) has no ``code`` and therefore matches
+    only catch-all routes — the reference behaves the same
+    (``content.code`` is undefined). Handler errors are logged and
+    swallowed (A16 at-least-once parity). Returns the number of matched
+    routes, transform-only routes included.
+    """
+    if content is None:
+        return 0
+    code = content.get("code") if isinstance(content, dict) else None
+    matched = match_routes(routes, topic, code)
+    for route in matched:
+        if route.callback is None:
+            continue
+        try:
+            route.callback(content, emit_fn)
+        except Exception:  # noqa: BLE001 — reference swallows (A16)
+            logger.exception("Handler error on route %s", route)
+    return len(matched)
 
 
 class ConsumerRouter:
@@ -235,44 +264,17 @@ class ConsumerRouter:
             topic, event_name, data = output.topic, output.event_name, output.data
 
         code = to_upper_camel_case(event_name if event_name is not None else topic)
-        matched = [
-            r
-            for r in self.routes
-            if r.topic == topic and (r.event_name is None or r.event_name == code)
-        ]
-        for route in matched:
+        for route in match_routes(self.routes, topic, code):
             if route.callback is not None:
                 route.callback({**data, "code": code}, emit)
 
     # -- batch/driver-side dispatch (A5 + A7 + A16) --------------------
 
     def dispatch_message(self, topic: str, content: Any) -> int:
-        """Dispatch one parsed message to all matching routes.
-
-        Corrupt (``None``) content is silently dropped (A3). Non-dict
-        JSON (arrays, numbers, strings) has no ``code`` and therefore
-        matches only catch-all routes — the reference behaves the same
-        (``content.code`` is undefined). Handler errors are logged and
-        swallowed (A16 at-least-once parity). Returns the number of
-        matched routes.
-        """
-        if content is None:
-            return 0
-        code = content.get("code") if isinstance(content, dict) else None
-        matched = [
-            r
-            for r in self.routes
-            if r.topic == topic
-            and (r.event_name is None or r.event_name == code)
-        ]
-        for route in matched:
-            if route.callback is None:
-                continue
-            try:
-                route.callback(content, emit)
-            except Exception:  # noqa: BLE001 — reference swallows (A16)
-                logger.exception("Handler error on route %s", route)
-        return len(matched)
+        """Dispatch one parsed message to all matching routes with the
+        real ``emit`` (see :func:`dispatch_to_routes`). Returns the
+        number of matched routes."""
+        return dispatch_to_routes(self.routes, topic, content, emit)
 
     # -- declarative compilation (the scale path) ----------------------
 
@@ -537,35 +539,33 @@ class ConsumerRouter:
         return self._queries
 
     def batch_processor(self) -> Callable[[DataFrame, int], None]:
-        """The ``foreachBatch`` body — dispatch mode chosen per contract.
+        """The ``foreachBatch`` body for ``config.consumer.dispatch``.
 
-        * ``'one-by-one'`` (A15): total order is the contract
-          (reference ``legacy-consumer.ts:165-168``) → driver-side
-          serial dispatch over rows sorted by (partition, offset).
-        * ``'topic'`` (A14/A16): handlers are independent → dispatch on
-          EXECUTORS via ``mapPartitions`` when every callback pickles
-          (the driver never materializes the batch); handler ``emit``s
-          are collected per partition and written distributed to Kafka.
-          Unpicklable callbacks (closures over sockets etc.) fall back
-          to driver dispatch with a warning.
+        * ``'driver'`` (default): the reference's single-process model —
+          every micro-batch row is collected and dispatched on the
+          driver, so callbacks may close over and mutate driver state.
+          Strategy ``'one-by-one'`` (A15, total order, reference
+          ``legacy-consumer.ts:165-168``) always dispatches here, over
+          rows sorted by (partition, offset).
+        * ``'executor'`` (``'topic'`` strategy, A14/A16): handlers run in
+          worker processes via ``mapPartitions`` and the driver never
+          materializes the batch; their ``emit``s are collected per
+          partition and written to Kafka distributed. Callbacks must
+          cloudpickle (a ``ValueError`` here otherwise), and their side
+          effects must flow through ``emit`` or external systems, never
+          driver memory.
 
-        ``config.consumer.dispatch`` selects the mode: the default
-        ``'driver'`` keeps the single-process reference execution model
-        (callbacks may mutate driver state — the semantics
-        closures-over-lists expect); opt-in ``'executor'`` requires
-        serializable callbacks and raises otherwise; ``'auto'`` picks
-        executor mode when every callback pickles, warning loudly that
-        driver-memory side effects will be lost there. Executor-mode
-        callbacks run in worker processes: their side effects must flow
-        through ``emit`` or external systems, never driver memory.
+        Any other ``dispatch`` value raises ``ValueError``.
         """
         config = get_config()
         strategy = config.consumer.strategy
-        dispatch_cfg = config.consumer.dispatch
-        router = self
+        dispatch = config.consumer.dispatch
+        if dispatch not in ("driver", "executor"):
+            raise ValueError(
+                f"consumer.dispatch must be 'driver' or 'executor', got {dispatch!r}"
+            )
 
-        serializable = None
-        if strategy == "topic" and dispatch_cfg in ("auto", "executor"):
+        if strategy == "topic" and dispatch == "executor":
             # probe with cloudpickle — what Spark ships closures with —
             # so plain lambdas/closures still qualify for executor mode
             from pyspark import cloudpickle
@@ -577,35 +577,18 @@ class ConsumerRouter:
             ]
             try:
                 cloudpickle.dumps(route_specs)
-                serializable = route_specs
-                if dispatch_cfg == "auto":
-                    logger.warning(
-                        "consumer.dispatch='auto' selected EXECUTOR dispatch: "
-                        "callbacks run in worker processes; mutations of "
-                        "driver-side state will be lost. Set "
-                        "dispatch='driver' for single-process semantics."
-                    )
-            except Exception:  # noqa: BLE001 — fall back to driver dispatch
-                if dispatch_cfg == "executor":
-                    raise ValueError(
-                        "consumer.dispatch='executor' but a callback is not "
-                        "serializable"
-                    )
-                logger.warning(
-                    "Callbacks not serializable; falling back to driver-side "
-                    "dispatch (throughput bounded by the driver)"
-                )
-                serializable = None
-
-        if serializable is not None:
+            except Exception as exc:  # noqa: BLE001 — any pickling failure
+                raise ValueError(
+                    "consumer.dispatch='executor' but a callback is not "
+                    "serializable"
+                ) from exc
             dispatcher = make_partition_dispatcher(
-                serializable,
+                route_specs,
                 resolve_app_name(None, config),
                 config.host,
                 list(config.producer.additional_hosts),
                 config.producer.key_column,
             )
-            writer_opts = kafka_writer_options(config)
 
             def process_batch(batch_df: DataFrame, batch_id: int) -> None:
                 spark_b = batch_df.sparkSession
@@ -626,29 +609,18 @@ class ConsumerRouter:
                         part = emitted.filter(
                             F.col("hosts") == host_set
                         ).select("topic", "value", "key")
-                        for host in host_set.split(","):
-                            w = part.write.format("kafka").option(
-                                "kafka.bootstrap.servers", host
-                            )
-                            for opt, val in writer_opts.items():
-                                w = w.option(opt, val)
-                            w.save()
+                        write_to_kafka(part, host_set.split(","), config)
                 finally:
                     emitted.unpersist()
 
             process_batch.mode = "executor"
 
         else:
-            warn_rows = config.consumer.driver_dispatch_warn_rows
             warned = [False]  # once per router, not per micro-batch
 
             def process_batch(batch_df: DataFrame, batch_id: int) -> None:
                 rows = batch_df.collect()
-                if (
-                    warn_rows is not None
-                    and not warned[0]
-                    and len(rows) > warn_rows
-                ):
+                if not warned[0] and len(rows) > DRIVER_DISPATCH_WARN_ROWS:
                     warned[0] = True
                     logger.warning(
                         "Driver-mode dispatch collected %d rows in one "
@@ -658,15 +630,16 @@ class ConsumerRouter:
                         "callbacks) to dispatch on workers, or cap batches "
                         "with max_messages_per_topic/maxOffsetsPerTrigger.",
                         len(rows),
-                        warn_rows,
+                        DRIVER_DISPATCH_WARN_ROWS,
                     )
                 if strategy == "one-by-one" and {"partition", "offset"} <= set(
                     batch_df.columns
                 ):
                     rows = sorted(rows, key=lambda r: (r["partition"], r["offset"]))
+                routes = self.routes
                 for row in rows:
                     content = get_parsed_json(row["value"])
-                    router.dispatch_message(row["topic"], content)
+                    dispatch_to_routes(routes, row["topic"], content, emit)
 
             process_batch.mode = "driver"
 

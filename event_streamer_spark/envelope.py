@@ -21,7 +21,7 @@ from typing import Optional, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 # Byte-parity with the reference's createdAt format (legacy-producer.ts:42):
 # "YYYY-MM-DD HH:MM:SSZ" — space separator, second precision, literal Z.
@@ -112,23 +112,34 @@ def serialize(df: DataFrame, value_col: str = "value") -> DataFrame:
     return df.select(F.to_json(F.struct(*df.columns)).alias(value_col))
 
 
-def _with_corrupt_field(
-    schema: Union[StructType, str]
-) -> Union[StructType, str]:
-    """Append the PERMISSIVE corrupt-record column to a user schema.
+def _parse_valid(
+    df: DataFrame, schema: Union[StructType, str], value_col: str
+) -> DataFrame:
+    """``df`` plus the parsed ``__parsed`` struct, keeping only rows whose
+    ``value`` parses under ``schema`` (A3).
 
-    A ``StructType`` is extended STRUCTURALLY — no DDL round-trip, so
-    field names containing ``:`` (or anything else ``simpleString()``
-    can't re-parse) survive intact. A DDL string gets the column
-    appended textually.
+    ``from_json`` alone maps non-object JSON to an all-null struct
+    instead of NULL, which a bare isNotNull misses, so the schema gets a
+    PERMISSIVE corrupt-record column that must stay NULL. A
+    ``StructType`` is extended STRUCTURALLY — no DDL round-trip, so field
+    names containing ``:`` (or anything else ``simpleString()`` can't
+    re-parse) survive intact; a DDL string gets the column appended
+    textually.
     """
-    from pyspark.sql.types import StringType, StructField
-
     if isinstance(schema, StructType):
-        return StructType(
+        full_schema: Union[StructType, str] = StructType(
             list(schema.fields) + [StructField("__corrupt", StringType())]
         )
-    return f"{schema}, __corrupt string"
+    else:
+        full_schema = f"{schema}, __corrupt string"
+    return df.withColumn(
+        "__parsed",
+        F.from_json(
+            F.col(value_col).cast("string"),
+            full_schema,
+            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "__corrupt"},
+        ),
+    ).filter(F.col("__parsed").isNotNull() & F.col("__parsed.__corrupt").isNull())
 
 
 def drop_corrupt(
@@ -136,25 +147,8 @@ def drop_corrupt(
 ) -> DataFrame:
     """Filter out rows whose ``value`` doesn't parse under ``schema``,
     keeping the ORIGINAL columns (A3 for dispatch paths that re-parse
-    row-side). Same PERMISSIVE + corrupt-column trick as
-    :func:`parse_stream` — ``from_json`` alone maps non-object JSON to
-    an all-null struct instead of NULL, which a bare isNotNull misses.
-    """
-    full_schema = _with_corrupt_field(schema)
-    return (
-        df.withColumn(
-            "__parsed",
-            F.from_json(
-                F.col(value_col).cast("string"),
-                full_schema,
-                {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "__corrupt"},
-            ),
-        )
-        .filter(
-            F.col("__parsed").isNotNull() & F.col("__parsed.__corrupt").isNull()
-        )
-        .drop("__parsed")
-    )
+    row-side)."""
+    return _parse_valid(df, schema, value_col).drop("__parsed")
 
 
 def parse_stream(
@@ -165,24 +159,10 @@ def parse_stream(
 ) -> DataFrame:
     """Parse JSON ``value`` bytes; drop corrupt rows silently (A3).
 
-    ``from_json`` yields NULL for unparseable or non-object values; the
-    filter drops them — the PERMISSIVE-mode analog of the reference's
-    ``getParsedJson() == null`` skip. Kept narrow: no shuffle, fully
-    codegen'd, pushdown-friendly.
+    The PERMISSIVE-mode analog of the reference's ``getParsedJson() ==
+    null`` skip. Kept narrow: no shuffle, fully codegen'd,
+    pushdown-friendly.
     """
-    # PERMISSIVE mode routes malformed input (including non-object JSON,
-    # which from_json otherwise maps to an all-null struct) into the
-    # corrupt-record column, which we then require to be NULL.
-    full_schema = _with_corrupt_field(schema)
-    parsed = df.withColumn(
-        "__parsed",
-        F.from_json(
-            F.col(value_col).cast("string"),
-            full_schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "__corrupt"},
-        ),
-    ).filter(
-        F.col("__parsed").isNotNull() & F.col("__parsed.__corrupt").isNull()
-    )
+    parsed = _parse_valid(df, schema, value_col)
     keep = [c for c in keep_cols if c in df.columns]
     return parsed.select(*keep, "__parsed.*").drop("__corrupt")

@@ -58,10 +58,10 @@ REGISTRY: dict[str, QuerySpec] = {}
 # part filename — all listable on any object store, where mtime is
 # coarse, clock-skewed, or synthesized (the r10/r11 watch item). A
 # rewrite changes bytes or part names, so it invalidates; a bare
-# ``touch`` does NOT (correct: the plan is still valid). For the
-# pathological same-size/same-names in-place rewrite, set
-# EVENT_STREAMER_PLAN_CACHE_VERSION to any new string (it is part of
-# the key) or EVENT_STREAMER_PLAN_CACHE=0 to kill the cache outright.
+# ``touch`` does NOT (correct: the plan is still valid). After the
+# pathological same-size/same-names in-place rewrite of a directory,
+# call ``clear_plan_cache()``; EVENT_STREAMER_PLAN_CACHE=0 kills the
+# cache outright.
 # The applicationId drops entries from stopped sessions.
 
 _PLAN_CACHE: dict[tuple, DataFrame] = {}
@@ -206,7 +206,6 @@ def query(
                 spark.sparkContext.applicationId,
                 os.path.abspath(sf_dir),
                 fps,
-                os.environ.get("EVENT_STREAMER_PLAN_CACHE_VERSION"),
             )
             with _PLAN_LOCK:
                 cached = _PLAN_CACHE.get(key)

@@ -25,8 +25,9 @@ producers internally (``spark.kafka.producer.cache.timeout``), replacing
 the reference's hand-rolled TTL pool (A17).
 
 At scale: ``emit`` from a driver program is for control-plane volumes.
-Data-plane production is ``sinks.write_to_kafka`` /
-``streaming`` writeStream, which shard the write across executors.
+Data-plane production is executor dispatch (``consumer.dispatch=
+'executor'``) or a ``streaming`` writeStream, which shard the write
+across executors; every Kafka write goes through :func:`write_to_kafka`.
 """
 
 from __future__ import annotations
@@ -34,14 +35,16 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
-from typing import Any, Optional, Sequence, Union
+from typing import TYPE_CHECKING, Any, Optional, Sequence, Union
 
 from event_streamer_spark.config import Config, get_config, resolve_app_name
 from event_streamer_spark.helpers import to_array, to_upper_camel_case
 
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
+
+# Byte-for-byte the Spark-side ``envelope.CREATED_AT_FORMAT``.
 CREATED_AT_PYTHON_FORMAT = "%Y-%m-%d %H:%M:%S"
-# Spark-side equivalent for column expressions (must agree byte-for-byte):
-CREATED_AT_SPARK_FORMAT = "yyyy-MM-dd HH:mm:ss'Z'"
 
 
 @dataclass
@@ -180,6 +183,24 @@ def validate_outputs(outputs: Sequence[Output]) -> None:
             raise ValueError("Invalid message code")
 
 
+def prepare_emit(
+    param1: Union[str, Output, dict, list],
+    param2: Any,
+    param3: Any,
+    app_name: str,
+    primary_host: str,
+    additional_hosts: Optional[list[str]],
+    key_column: Optional[str],
+) -> tuple[list[Payload], list[str]]:
+    """Every step of :func:`emit` before the write: resolve the overloads,
+    validate (A13), enrich and serialize (A11) → ``(payloads, hosts)``,
+    ``hosts`` being the target clusters (A10)."""
+    outputs, overwrite_hosts = parse_emit_args(param1, param2, param3)
+    validate_outputs(outputs)
+    payloads = normalize_payloads(outputs, app_name, key_column)
+    return payloads, get_hosts(primary_host, additional_hosts or None, overwrite_hosts)
+
+
 def emit(
     param1: Union[str, Output, dict, list],
     param2: Any = None,
@@ -205,21 +226,18 @@ def emit(
         "for Schema Registry support."
     )
     config = get_config()
-    app_name = resolve_app_name(None, config)
-
-    outputs, overwrite_hosts = parse_emit_args(param1, param2, param3)
-    validate_outputs(outputs)
-    payloads = normalize_payloads(
-        outputs, app_name, config.producer.key_column
+    payloads, hosts = prepare_emit(
+        param1,
+        param2,
+        param3,
+        resolve_app_name(None, config),
+        config.host,
+        config.producer.additional_hosts,
+        config.producer.key_column,
     )
-
     if config.only_testing:
         _emitted_events.extend(payloads)
         return []
-
-    hosts = get_hosts(
-        config.host, config.producer.additional_hosts or None, overwrite_hosts
-    )
     return _send_to_kafka(payloads, hosts, config)
 
 
@@ -268,6 +286,18 @@ def payload_rows(
     return rows
 
 
+def write_to_kafka(df: DataFrame, hosts: Sequence[str], config: Config) -> None:
+    """Write ``df`` (``topic``, ``value`` and optional ``key`` columns) to
+    every cluster in ``hosts`` (A10) with the producer's sink options
+    (:func:`kafka_writer_options`, A2). Persist ``df`` first when it
+    feeds more than one host."""
+    options = kafka_writer_options(config)
+    for host in hosts:
+        df.write.format("kafka").option("kafka.bootstrap.servers", host).options(
+            **options
+        ).save()
+
+
 def _send_to_kafka(payloads: list[Payload], hosts: list[str], config: Config) -> list:
     """Batch Kafka write of normalized payloads, one write per cluster (A10).
 
@@ -294,21 +324,12 @@ def _send_to_kafka(payloads: list[Payload], hosts: list[str], config: Config) ->
     df = spark.createDataFrame(rows, schema=schema)
     if len(hosts) > 1:
         df = df.persist()
-    results = []
     try:
-        for host in hosts:
-            writer = (
-                df.write.format("kafka")
-                .option("kafka.bootstrap.servers", host)
-            )
-            for opt, val in kafka_writer_options(config).items():
-                writer = writer.option(opt, val)
-            writer.save()
-            results.append({"host": host, "messages": len(rows)})
+        write_to_kafka(df, hosts, config)
     finally:
         if len(hosts) > 1:
             df.unpersist()
-    return results
+    return [{"host": host, "messages": len(rows)} for host in hosts]
 
 
 def get_emitted_events() -> list[Payload]:

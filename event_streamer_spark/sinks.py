@@ -1,60 +1,21 @@
-"""Sink helpers: multi-cluster replication, DLQ, exactly-once upgrades.
+"""Sink helper: the dead-letter split (SURVEY §2.A A16).
 
-SURVEY §2.A A10/A16 and §2.C C10, as Spark-first building blocks:
+``with_dlq`` is the A16 upgrade: the reference silently swallows
+handler errors; here failed records are *routed* to a dead-letter sink
+instead of lost, while the main branch stays declarative. It works per
+row on executors — no driver state.
 
-* ``multi_cluster_foreach_batch`` — the A10 pattern: persist each
-  micro-batch once, write it to N Kafka clusters (reference replicates
-  every emit to ``host + additionalHosts``).
-* ``with_dlq`` — the A16 upgrade: the reference silently swallows
-  handler errors; here failed records are *routed* to a dead-letter
-  sink instead of lost, while the main branch stays declarative.
-* ``idempotent_kafka_options`` — C10: checkpoint + idempotent producer
-  gives effectively-once delivery vs the reference's at-least-once.
-
-All helpers operate per micro-batch on executors — no driver state, so
-they hold at 1000-executor scale.
+Kafka writes (A2/A10) go through ``producer.write_to_kafka``; the C10
+effectively-once upgrade is ``ProducerConfig.idempotent`` plus a
+checkpointed query.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def multi_cluster_foreach_batch(
-    hosts: list[str],
-    topic: Optional[str] = None,
-    compression: Optional[str] = None,
-    idempotent: bool = False,
-) -> Callable[[DataFrame, int], None]:
-    """A10: one micro-batch → N Kafka clusters (reference
-    ``legacy-producer.ts:196-210`` replicates sequentially per host;
-    here the batch is persisted once and written per cluster).
-
-    Use: ``df.writeStream.foreachBatch(multi_cluster_foreach_batch([...]))``.
-    """
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        batch.persist()
-        try:
-            for host in hosts:
-                writer = (
-                    batch.write.format("kafka")
-                    .option("kafka.bootstrap.servers", host)
-                )
-                if topic:
-                    writer = writer.option("topic", topic)
-                if compression:
-                    writer = writer.option("kafka.compression.type", compression)
-                if idempotent:
-                    writer = writer.option("kafka.enable.idempotence", "true")
-                writer.save()
-        finally:
-            batch.unpersist()
-
-    return write_batch
 
 
 def with_dlq(
@@ -81,13 +42,3 @@ def with_dlq(
         .drop(output_col)
     )
     return ok, dlq
-
-
-def idempotent_kafka_options(checkpoint_dir: str) -> dict[str, str]:
-    """C10: options for an effectively-once Kafka sink (checkpointed
-    offsets + idempotent producer). Apply with ``**options``."""
-    return {
-        "checkpointLocation": checkpoint_dir,
-        "kafka.enable.idempotence": "true",
-        "kafka.acks": "all",
-    }

@@ -1,6 +1,6 @@
-"""Source connectors: Kafka, files, memory/rate (SURVEY §2.A A1, B1/B2)."""
+"""Source connectors: files, memory/rate (SURVEY §2.A B1/B2). The Kafka
+source is built by ``ConsumerRouter.start`` (A1)."""
 
-from event_streamer_spark.sources.kafka import read_kafka_stream, read_kafka_batch
 from event_streamer_spark.sources.files import read_file_stream
 
-__all__ = ["read_kafka_stream", "read_kafka_batch", "read_file_stream"]
+__all__ = ["read_file_stream"]

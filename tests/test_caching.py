@@ -154,18 +154,6 @@ class TestPlanCache:
         assert b is not a
         assert b.count() != n1
 
-    def test_version_conf_invalidates(self, spark, sf_dir, monkeypatch):
-        """EVENT_STREAMER_PLAN_CACHE_VERSION is part of the key — the
-        explicit escape hatch for same-size in-place rewrites."""
-        from event_streamer_spark.operators import REGISTRY
-
-        q = REGISTRY["b11_tpch_q1"].fn
-        a = q(spark, sf_dir)
-        monkeypatch.setenv("EVENT_STREAMER_PLAN_CACHE_VERSION", "v2")
-        b = q(spark, sf_dir)
-        assert b is not a
-        assert q(spark, sf_dir) is b  # stable within the new version
-
     def test_table_fingerprint_shape(self, tmp_path):
         """Unit contract: (count, bytes, max_name, footer_token) for
         single files — the token is a hash of the last 64 bytes, so a

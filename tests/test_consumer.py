@@ -4,9 +4,9 @@
 
 import pytest
 
-from event_streamer_spark.config import Config, ConsumerConfig, set_config
+from event_streamer_spark.config import Config, ConsumerConfig, ProducerConfig, set_config
 from event_streamer_spark.consumer import ConsumerRouter, Route
-from event_streamer_spark.producer import get_parsed_emitted_events
+from event_streamer_spark.producer import clear_emitted_events, get_parsed_emitted_events
 
 
 def _testing_config():
@@ -74,6 +74,46 @@ class TestAddOverloads:
         assert r.topics() == ["b", "a"]
 
 
+# One A5 truth table for every dispatch path: (topic, code, content is a
+# dict, routes whose callback runs in order, matched-route count). The
+# routes of _a5_router: "catch" = (t1, any event), "named" = (t1, EvX),
+# "other" = (t2, EvX), then a transform-only (t1, EvX) route that
+# matches without running a callback.
+A5_TABLE = [
+    ("t1", "EvX", True, ["catch", "named"], 3),  # topic hit, code match
+    ("t1", "EvY", True, ["catch"], 1),  # code mismatch: catch-all only
+    ("t2", "EvX", True, ["other"], 1),  # named route on another topic
+    ("t2", "EvY", True, [], 0),  # no catch-all on t2
+    ("t9", "EvX", True, [], 0),  # topic miss
+    ("t1", None, False, ["catch"], 1),  # non-dict content: catch-all only
+    ("t2", None, False, [], 0),
+]
+
+
+def _a5_router():
+    def recorder(name):
+        # a closure, so cloudpickle ships it by value to workers
+        def handler(content, emit_fn):
+            emit_fn("hits", {"route": name})
+
+        return handler
+
+    r = ConsumerRouter()
+    r.add("t1", recorder("catch"))
+    r.add("t1", "EvX", recorder("named"))
+    r.add("t2", "EvX", recorder("other"))
+    r.add(Route(topic="t1", event_name="EvX", transform=lambda df: df))
+    return r
+
+
+def _a5_content(code, is_dict):
+    return {"code": code, "p": 1} if is_dict else [1, 2]
+
+
+def _sink_hits():
+    return [e["data"]["route"] for e in get_parsed_emitted_events()]
+
+
 class TestInputDispatch:
     """Truth table (README.md:318-345): match iff topic equal AND
     (route has no event_name OR event_name == code)."""
@@ -137,6 +177,24 @@ class TestInputDispatch:
         assert ev["topic"] == "downstream"
         assert ev["event_name"] == "Forwarded"
         assert ev["data"]["orig"] == "Up"
+
+    def test_a5_truth_table_input(self):
+        _testing_config()
+        r = _a5_router()
+        for topic, code, is_dict, hits, _ in A5_TABLE:
+            if not is_dict:
+                continue  # input() payloads are dicts by construction
+            clear_emitted_events()
+            r.input({"topic": topic, "event_name": code, "data": {"p": 1}})
+            assert _sink_hits() == hits, (topic, code)
+
+    def test_a5_truth_table_dispatch_message(self):
+        _testing_config()
+        r = _a5_router()
+        for topic, code, is_dict, hits, matched in A5_TABLE:
+            clear_emitted_events()
+            n = r.dispatch_message(topic, _a5_content(code, is_dict))
+            assert (_sink_hits(), n) == (hits, matched), (topic, code, is_dict)
 
 
 class TestDispatchErrors:
@@ -385,7 +443,7 @@ class TestKafkaSourcesSpec:
 class TestDispatchMode:
     """Dispatch-mode selection: the DEFAULT is driver (reference
     single-process semantics); executor dispatch is opt-in via
-    dispatch='auto'/'executor' and warns when auto picks it."""
+    dispatch='executor'; any other value raises."""
 
     def test_default_is_driver_mode(self):
         # default config (no dispatch override) → driver dispatch, even
@@ -424,9 +482,7 @@ class TestDispatchMode:
         process(batch, 0)
         assert sorted(seen) == [3, 5]
 
-    def test_auto_opt_in_selects_executor_with_warning(self, caplog):
-        import logging
-
+    def test_auto_is_rejected(self):
         set_config(
             Config(
                 host="h:9092",
@@ -437,9 +493,8 @@ class TestDispatchMode:
         )
         r = ConsumerRouter()
         r.add("t1", _double_handler)
-        with caplog.at_level(logging.WARNING, "event_streamer_spark.consumer"):
-            assert r.batch_processor().mode == "executor"
-        assert any("EXECUTOR dispatch" in m for m in caplog.messages)
+        with pytest.raises(ValueError, match="'driver' or 'executor'"):
+            r.batch_processor()
 
     def test_executor_opt_in(self):
         set_config(
@@ -465,19 +520,20 @@ class TestDispatchMode:
         r.add("t1", _double_handler)
         assert r.batch_processor().mode == "driver"
 
-    def test_unpicklable_callback_falls_back(self):
+    def test_unpicklable_callback_raises(self):
         set_config(
             Config(
                 host="h:9092",
                 consumer=ConsumerConfig(
-                    group_id="g", strategy="topic", dispatch="auto"
+                    group_id="g", strategy="topic", dispatch="executor"
                 ),
             )
         )
         r = ConsumerRouter()
         sock = __import__("threading").Lock()  # unpicklable closure state
         r.add("t1", lambda c, e: sock)
-        assert r.batch_processor().mode == "driver"
+        with pytest.raises(ValueError, match="not serializable"):
+            r.batch_processor()
 
 
 class TestExecutorDispatch:
@@ -536,10 +592,76 @@ class TestExecutorDispatch:
         assert len(batch.rdd.mapPartitions(catch_all).collect()) == 2
         assert len(batch.rdd.mapPartitions(named).collect()) == 0
 
+    def test_a5_truth_table_kernel(self, spark):
+        import json
+
+        from event_streamer_spark.consumer import make_partition_dispatcher
+
+        _testing_config()
+        dispatcher = make_partition_dispatcher(
+            [(x.topic, x.event_name, x.callback) for x in _a5_router().routes],
+            "app", "h:9092", [],
+        )
+        for topic, code, is_dict, hits, _ in A5_TABLE:
+            value = json.dumps(_a5_content(code, is_dict))
+            batch = spark.createDataFrame(
+                [(topic, value)], "topic string, value string"
+            )
+            rows = batch.rdd.mapPartitions(dispatcher).collect()
+            got = [json.loads(v)["route"] for _, v, _, _ in rows]
+            assert got == hits, (topic, code, is_dict)
+
+    def test_batch_body_writes_each_host_its_rows(self, spark, monkeypatch):
+        import json
+
+        from event_streamer_spark import consumer
+
+        set_config(
+            Config(
+                host="h1:9092",
+                app_name="app",
+                producer=ProducerConfig(additional_hosts=["h2:9092"]),
+                consumer=ConsumerConfig(
+                    group_id="g", strategy="topic", dispatch="executor"
+                ),
+            )
+        )
+        written: dict = {}
+
+        def fake_write(df, hosts, config):
+            assert df.columns == ["topic", "value", "key"]
+            rows = sorted((r["topic"], json.loads(r["value"])["v"]) for r in df.collect())
+            for host in hosts:
+                written.setdefault(host, []).extend(rows)
+
+        monkeypatch.setattr(consumer, "write_to_kafka", fake_write)
+
+        def route(content, emit_fn):
+            v = content["v"]
+            if v % 2:  # odd values overwrite the target clusters
+                emit_fn([{"topic": "odd", "data": {"v": v}}], ["h3:9092", "h4:9092"])
+            else:
+                emit_fn("even", {"v": v})
+
+        r = ConsumerRouter()
+        r.add("t1", route)
+        process = r.batch_processor()
+        assert process.mode == "executor"
+        batch = spark.createDataFrame(
+            [("t1", json.dumps({"v": v, "code": "T1"})) for v in range(6)],
+            "topic string, value string",
+        ).repartition(3)
+        process(batch, 0)
+        even = [("even", 0), ("even", 2), ("even", 4)]
+        odd = [("odd", 1), ("odd", 3), ("odd", 5)]
+        assert written == {
+            "h1:9092": even, "h2:9092": even, "h3:9092": odd, "h4:9092": odd,
+        }
+
 
 class TestDriverVolumeGuard:
-    """Driver dispatch collects whole micro-batches; above the
-    configured row threshold a ONE-TIME warning points at
+    """Driver dispatch collects whole micro-batches; above
+    ``DRIVER_DISPATCH_WARN_ROWS`` rows a ONE-TIME warning points at
     dispatch='executor' (VERDICT r4 item 6)."""
 
     def _batch(self, spark, n):
@@ -550,18 +672,21 @@ class TestDriverVolumeGuard:
             "topic string, value string",
         )
 
-    def test_warning_fires_once_above_threshold(self, spark, caplog):
-        import logging
-
+    def _config(self):
         set_config(
             Config(
                 host="h:9092",
-                consumer=ConsumerConfig(
-                    group_id="g", strategy="topic",
-                    driver_dispatch_warn_rows=3,
-                ),
+                consumer=ConsumerConfig(group_id="g", strategy="topic"),
             )
         )
+
+    def test_warning_fires_once_above_threshold(self, spark, caplog, monkeypatch):
+        import logging
+
+        from event_streamer_spark import consumer
+
+        monkeypatch.setattr(consumer, "DRIVER_DISPATCH_WARN_ROWS", 3)
+        self._config()
         seen: list = []
         r = ConsumerRouter()
         r.add("t1", lambda c, e: seen.append(c["v"]))
@@ -573,25 +698,14 @@ class TestDriverVolumeGuard:
         assert len(warnings) == 1
         assert len(seen) == 10  # dispatch itself unaffected
 
-    def test_silent_below_threshold_and_when_disabled(self, spark, caplog):
+    def test_silent_below_threshold(self, spark, caplog):
         import logging
 
-        for threshold in (100, None):
-            set_config(
-                Config(
-                    host="h:9092",
-                    consumer=ConsumerConfig(
-                        group_id="g", strategy="topic",
-                        driver_dispatch_warn_rows=threshold,
-                    ),
-                )
-            )
-            r = ConsumerRouter()
-            r.add("t1", lambda c, e: None)
-            with caplog.at_level(
-                logging.WARNING, "event_streamer_spark.consumer"
-            ):
-                r.batch_processor()(self._batch(spark, 5), 0)
+        self._config()
+        r = ConsumerRouter()
+        r.add("t1", lambda c, e: None)
+        with caplog.at_level(logging.WARNING, "event_streamer_spark.consumer"):
+            r.batch_processor()(self._batch(spark, 5), 0)
         assert not any("dispatch='executor'" in m for m in caplog.messages)
 
 
