@@ -9,6 +9,12 @@ without native Hadoop IO the default FileContext manager forks a
 ``readlink``/``chmod`` process per metadata call, and on ``file:`` both
 managers refuse to overwrite an existing batch file (exists-check, then
 rename).
+Python workers start from ``worker_daemon`` instead of ``pyspark.daemon``:
+before Python 3.13 each task's ``importlib.invalidate_caches()`` re-reads
+the directory of every zip on the worker's path (``pyspark.zip``, py4j,
+the spark-core jar), about 100 ms per task, and ``worker_daemon``
+backports 3.13's lazy re-read. Executors must be able to import this
+package, as executor dispatch already requires.
 """
 
 from __future__ import annotations
@@ -44,6 +50,8 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
+        # before Python 3.13 every task re-reads each zip on sys.path
+        .config("spark.python.daemon.module", "event_streamer_spark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
